@@ -4,8 +4,6 @@ import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField}
 
-import graft.core.SchemaDoc
-
 /** Local twin of the BigQuery CSV LOAD JOB the reference's importer runs
   * (app/bq-importer/main.py:19-41) — the load-contract semantics that the
   * plain `saveAsTable` stand-in ([[Pipeline.loadToTable]]) does not
@@ -24,12 +22,12 @@ import graft.core.SchemaDoc
   *     (the reference pins WRITE_TRUNCATE, main.py:29).
   *
   * The twin enforces all five locally: parse under the explicit schema in
-  * PERMISSIVE mode with a corrupt-record column, count bad records
-  * BEFORE any write (so failure cannot touch the destination), then
-  * apply the disposition via `saveAsTable`. Scale shape: the validation
-  * pass and the write are both distributed scans of the CSV; only the
-  * bad-record COUNT (and a bounded sample for the error message) reaches
-  * the driver.
+  * PERMISSIVE mode with a corrupt-record column, count bad and good
+  * records in one aggregate BEFORE any write (so failure cannot touch
+  * the destination), then apply the disposition via `saveAsTable`.
+  * Scale shape: the validation pass and the write are both distributed
+  * scans of the cached parse; only the two COUNTS (and a bounded sample
+  * for the error message) reach the driver.
   */
 object BqLoad {
 
@@ -76,7 +74,7 @@ object BqLoad {
       config.skipLeadingRows == 0 || config.skipLeadingRows == 1,
       s"skip_leading_rows=${config.skipLeadingRows}: only 0 (headerless — the reference's " +
         "setting) and 1 (per-file header skip) have local twins")
-    val declared = SchemaDoc.toStructType(SchemaDoc.parseJson(config.schemaJson))
+    val declared = Pipeline.declaredSchema(config.schemaJson)
     // PERMISSIVE + corrupt-record column: a row that fails the declared
     // types (or arrives with the wrong column count) lands with the raw
     // line in CorruptCol instead of throwing mid-scan — so the job can
@@ -95,15 +93,20 @@ object BqLoad {
       // queries that reference ONLY the corrupt column of a raw CSV scan
       .cache()
     try {
-      val bad = parsed.filter(col(CorruptCol).isNotNull)
-      val badCount = bad.count()
+      // bad AND good rows in one aggregate over the cached relation,
+      // BEFORE any write: the good count is exactly the rows the write
+      // below loads, so output_rows needs no post-write action.
+      val isBad = col(CorruptCol).isNotNull
+      val counts = parsed.agg(count(when(isBad, 1)), count(when(!isBad, 1))).head()
+      val (badCount, goodCount) = (counts.getLong(0), counts.getLong(1))
       if (badCount > config.maxBadRecords) {
-        val sample = bad.select(col(CorruptCol)).head(1).headOption.map(_.getString(0)).getOrElse("")
+        val sample =
+          parsed.filter(isBad).select(col(CorruptCol)).head(1).headOption.map(_.getString(0)).getOrElse("")
         throw new LoadJobFailed(
           s"CSV load failed: $badCount bad record(s) exceed max_bad_records=" +
             s"${config.maxBadRecords}; first: ${sample.take(200)}")
       }
-      val good = parsed.filter(col(CorruptCol).isNull).drop(CorruptCol)
+      val good = parsed.filter(!isBad).drop(CorruptCol)
       config.writeDisposition match {
         case WriteEmpty if spark.catalog.tableExists(table) && !spark.table(table).isEmpty =>
           throw new LoadJobFailed(s"WRITE_EMPTY: destination table $table is not empty")
@@ -114,10 +117,8 @@ object BqLoad {
       }
       // output_rows = rows loaded BY THIS JOB (main.py:41-43) — for
       // WriteAppend a destination count would report pre-existing rows
-      // too, diverging from the contract (round-15 advice). `good` is a
-      // filter over the cached validation relation, so this is a cheap
-      // second action, not a rescan.
-      LoadJobResult(outputRows = good.count(), badRecords = badCount)
+      // too, diverging from the contract (round-15 advice).
+      LoadJobResult(outputRows = goodCount, badRecords = badCount)
     } finally {
       parsed.unpersist()
       ()

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{SchemaColumn, SchemaDoc}
 import graft.sources.DirtyCsv
@@ -69,26 +70,38 @@ object Pipeline {
   def cleanDataStage(spark: SparkSession, layout: Layout, table: String): Unit =
     DirtyCsv.repairToCleanCsv(spark, layout.dirtyCsv(table), layout.cleanCsv(table))
 
+  /** The explicit schema a load runs under: the layout's BigQuery JSON
+    * doc for `table` (stage 2's output), as Spark types. Reading it
+    * touches only the small JSON file on the driver, never a Spark job.
+    */
+  def declaredSchema(spark: SparkSession, layout: Layout, table: String): StructType =
+    declaredSchema(SchemaFile.readText(spark, layout.schemaJson(table)))
+
+  /** A BigQuery JSON schema doc (`job_config.schema`,
+    * app/bq-importer/main.py:22-27) as Spark types.
+    */
+  def declaredSchema(schemaJson: String): StructType =
+    SchemaDoc.toStructType(SchemaDoc.parseJson(schemaJson))
+
   /** Read a cleaned CSV under the explicit JSON schema (headerless,
     * `skip_leading_rows=0` parity — app/bq-importer/main.py:26-28).
     */
-  def readClean(spark: SparkSession, layout: Layout, table: String): DataFrame = {
-    val schema = SchemaDoc.toStructType(
-      SchemaDoc.parseJson(SchemaFile.readText(spark, layout.schemaJson(table))))
+  def readClean(spark: SparkSession, layout: Layout, table: String): DataFrame =
     spark.read
-      .schema(schema)
+      .schema(declaredSchema(spark, layout, table))
       .option("header", "false")
       .option("quote", "\"")
       .option("escape", "\"")
       .option("nullValue", "")
       .csv(layout.cleanCsv(table))
-  }
 
   /** Stage 4 — load through the pluggable [[WarehouseSink]] seam
     * (round-15 verdict #5): default destination is the local parquet
     * stand-in; a catalog table, the full BqLoad load-job contract, or a
     * real BigQuery connector write are drop-ins — the stage logic never
-    * changes with the destination.
+    * changes with the destination. With the parquet or catalog sink the
+    * stage is one Spark job, the write; the returned relation is read
+    * without running a job.
     */
   def loadStage(
       spark: SparkSession,

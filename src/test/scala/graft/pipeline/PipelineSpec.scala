@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.Row
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftShim, Row}
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
@@ -223,6 +226,110 @@ class PipelineSpec extends SparkSpec {
       }
       assert(spark.table(t).count() == 3, "failed load touched the destination")
     }
+  }
+
+  // ---- the load stage is one Spark job ----
+
+  /** Run `body` and count the Spark jobs it started: a test listener
+    * counts the jobs of a job group set on this thread only (a job
+    * another suite left running cannot leak in), and the listener bus
+    * is drained before the count is read so none of `body`'s is missed.
+    */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val group = s"jobs-during-${System.nanoTime()}"
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "jobsDuring")
+    try {
+      val out = body
+      GraftShim.drainListenerBus(spark)
+      (out, jobs.get)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** Stages 1-3 for `table`: everything a load needs under `layout`. */
+  private def stageForLoad(layout: Pipeline.Layout, table: String, df: DataFrame = usersDf,
+      types: Seq[SchemaColumn] = usersTypes): Unit = {
+    Pipeline.exportStage(spark, df, types, layout, table)
+    Pipeline.cleanSchemaStage(spark, layout, table)
+    Pipeline.cleanDataStage(spark, layout, table)
+  }
+
+  test("load stage job counts: parquet and catalog sinks are one job, BqLoad four") {
+    val layout = freshLayout()
+    stageForLoad(layout, "users")
+    // the default sink: the parquet write is the only job; reading the
+    // result back under the declared schema infers nothing
+    val (out, parquetJobs) = jobsDuring(Pipeline.loadStage(spark, layout, "users"))
+    assert(parquetJobs == 1, s"default loadStage ran $parquetJobs jobs")
+    assert(out.count() == 3)
+    withLoadTable("users_jobs") { t =>
+      stageForLoad(layout, t)
+      val (_, catalogJobs) = jobsDuring(Pipeline.loadStage(spark, layout, t, CatalogWarehouseSink))
+      assert(catalogJobs == 1, s"catalog sink ran $catalogJobs jobs")
+      // BqLoad: materializing the cached parse, the bad/good aggregate
+      // over it (a map job and a result job under AQE), then the write
+      val (_, bqJobs) = jobsDuring(Pipeline.loadStage(spark, layout, t, BqLoadWarehouseSink()))
+      assert(bqJobs == 4, s"BqLoad sink ran $bqJobs jobs")
+    }
+  }
+
+  test("every sink returns the source's row count from its load") {
+    import org.apache.spark.sql.functions._
+    // several partitions on both sides of the write, with NULL cells
+    val n = 5000L
+    val src = spark.range(0, n, 1, 4).select(
+      col("id"),
+      when(col("id") % 7 === 0, lit(null)).otherwise(concat(lit("n"), col("id"))).as("name"),
+      when(col("id") % 5 === 0, lit(null)).otherwise(col("id") / 4.0).as("amount"))
+    val types = usersTypes.take(3)
+    val layout = freshLayout()
+    stageForLoad(layout, "many", src, types)
+    assert(ParquetWarehouseSink.load(spark, layout, "many") == n)
+    assert(spark.read.parquet(layout.warehouse("many")).count() == n)
+    withLoadTable("many_tbl") { t =>
+      stageForLoad(layout, t, src, types)
+      assert(CatalogWarehouseSink.load(spark, layout, t) == n)
+      assert(BqLoadWarehouseSink().load(spark, layout, t) == n)
+      assert(spark.table(t).count() == n)
+    }
+  }
+
+  test("parquet sink read: the declared schema equals the schema the files infer") {
+    // every BigQuery type a clean CSV can carry (BYTES cannot: Spark's
+    // CSV source has no binary type), one full row and one all-NULL row
+    val layout = freshLayout()
+    SchemaFile.writeText(spark, layout.schemaJson("typed"),
+      Seq("INTEGER", "FLOAT", "STRING", "DATE", "DATETIME", "TIMESTAMP", "NUMERIC", "BOOLEAN")
+        .map(tp => s"""{"name": "c_${tp.toLowerCase}", "type": "$tp", "mode": "NULLABLE"}""")
+        .mkString("[", ", ", "]"))
+    SchemaFile.writeText(spark, s"${layout.cleanCsv("typed")}/part-00000.csv",
+      "\"7\",\"1.5\",\"x\",\"2024-01-02\",\"2024-01-02 03:04:05\",\"2024-01-02 03:04:05\",\"12.345\",\"true\"\n" +
+        ",,,,,,,\n")
+    assert(ParquetWarehouseSink.load(spark, layout, "typed") == 2)
+    val read = ParquetWarehouseSink.read(spark, layout, "typed")
+    assert(read.schema == spark.read.parquet(layout.warehouse("typed")).schema)
+    assert(read.schema == Pipeline.declaredSchema(spark, layout, "typed"))
+    val rows = read.collect()
+    assert(rows.count(r => (0 until r.length).forall(r.isNullAt)) == 1)
+    assert(rows.count(r => (0 until r.length).forall(i => !r.isNullAt(i))) == 1, rows.mkString("; "))
+  }
+
+  test("a zero-row table loads, returns 0, and reads back empty under the declared schema") {
+    val layout = freshLayout()
+    stageForLoad(layout, "empty", usersDf.limit(0))
+    val (loaded, jobs) = jobsDuring(ParquetWarehouseSink.load(spark, layout, "empty"))
+    assert(loaded == 0 && jobs == 1)
+    val read = ParquetWarehouseSink.read(spark, layout, "empty")
+    assert(read.schema == Pipeline.declaredSchema(spark, layout, "empty"))
+    assert(read.isEmpty)
   }
 
   test("load job WriteAppend reports only THIS job's rows as output_rows") {
